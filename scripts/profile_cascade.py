@@ -57,8 +57,8 @@ def profile_once(spark, raw, label: str) -> dict[str, float]:
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="profile_cascade", cores=cpus)
+    # local[$SPARK_GRAFT_CPUS], else the CPUs in this process's affinity
+    spark = get_spark(app_name="profile_cascade")
     with tempfile.TemporaryDirectory() as td:
         raw_path = os.path.join(td, "tokens.parquet")
         token_table(spark, n_docs).write.mode("overwrite").parquet(raw_path)

@@ -7,5 +7,6 @@ from tods_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tods_spark_tests", cores=8, shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS], else the CPUs in this process's affinity
+    s = get_spark(app_name="tods_spark_tests", shuffle_partitions=8)
     yield s

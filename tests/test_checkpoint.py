@@ -202,3 +202,44 @@ def test_compaction_converges_and_prunes_multicol(spark, tmp_path):
     assert t.read().filter("day=3 and hour=4").count() == 400
     # convergence: an immediate second pass must find nothing to do
     assert t.compact(min_files=2) == {}
+
+
+def test_census_handoff_keeps_records(spark, tmp_path):
+    """A cascade tier fed the tier below's footer `row_counts()` as its
+    census (what run_engine does) writes the same per-partition lineage
+    as one that counts its own input with a groupBy job: rows_in,
+    rows_out and fingerprint agree for every 1m/1h/1d/1w record."""
+    from tods_spark.operators.rollup import rollup_cascade
+
+    raw = token_table(spark, 1500, cadence_s=3600).cache()  # ~9 weeks
+
+    def build(job: str, handoff: bool) -> dict:
+        ckpt = CheckpointLog(str(tmp_path / job / "ckpt.jsonl"))
+        below, census = None, None
+        for src, tier in ((None, "1m"), ("1m", "1h"), ("1h", "1d"),
+                          ("1d", "1w")):
+            table = PartitionedTable(spark, str(tmp_path / job / tier),
+                                     ["part_key"])
+            if below is None:
+                inp, compute, ts = raw, _compute, "ts"
+            else:
+                inp, ts = below.read().drop("part_key"), "window_start"
+                compute = lambda df, s=src, t=tier: rollup_cascade(df, s, t)  # noqa: E731
+            run_tier(spark, inp, compute, table, ckpt, job, tier,
+                     in_ts_col=ts, census=census if handoff else None)
+            assert table.row_counts() == {
+                str(r[0]): r[1] for r in
+                table.read().groupBy("part_key").count().collect()
+            }
+            below, census = table, table.row_counts()
+        return {
+            (r["tier"], r["partition"]):
+                (r["rows_in"], r["rows_out"], r["fingerprint"])
+            for r in ckpt.records()
+        }
+
+    counted = build("counted", handoff=False)
+    handed = build("handed", handoff=True)
+    assert {t for t, _ in counted} == {"1m", "1h", "1d", "1w"}
+    assert handed == counted
+    raw.unpersist()

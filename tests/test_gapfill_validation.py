@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from tods_spark.operators import gapfill, segmentation, validation
 
@@ -97,6 +98,17 @@ def test_gap_fill_tier_chunked_matches_perkey(spark):
            .select(cols).orderBy("source", "window_start").toPandas())
     pd.testing.assert_frame_equal(old, new, check_exact=True)
     assert new["is_gap"].any() and (~new["is_gap"]).any()
+
+
+def test_gap_fill_tier_rejects_negative_chunk_intervals(spark):
+    """A negative chunk width would number the chunks backwards in time and
+    carry FUTURE observations into the fill: it must raise instead."""
+    pdf = pd.DataFrame({"source": ["web"],
+                        "window_start": [pd.Timestamp(0, unit="s")],
+                        "cnt": [1], "avg_n_tok": [1.0]})
+    with pytest.raises(ValueError, match="chunk_intervals"):
+        gapfill.gap_fill_tier(spark.createDataFrame(pdf), 60,
+                              chunk_intervals=-4)
 
 
 def test_dedup_first_and_average(spark):

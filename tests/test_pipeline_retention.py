@@ -3,15 +3,18 @@ preprocessing operators."""
 
 from __future__ import annotations
 
-from datetime import datetime
+import os
+from datetime import datetime, timedelta
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tods_spark.datagen import token_table
 from tods_spark.operators import preprocessing as PP
 from tods_spark.pipeline import run_engine
+from tods_spark.plans.checkpoint import CheckpointLog
 
 
 def test_run_engine_end_to_end_and_resume(spark, tmp_path):
@@ -315,4 +318,236 @@ def test_refresh_fence_survives_crash_before_first_mark(spark, tmp_path):
         ), tier
     done = CheckpointLog(ckpt).done_partitions("refresh", "1m")
     assert set(dates) <= done
+    raw.unpersist()
+
+
+def _tree_state(base: str) -> dict:
+    """(size, mtime) of every file under the tier tables, manifests
+    included: equal states mean no tier file was written or removed."""
+    out = {}
+    for d, _, files in os.walk(base):
+        for f in files:
+            if f != "checkpoint.jsonl" and not f.startswith("."):
+                st = os.stat(os.path.join(d, f))
+                out[os.path.relpath(os.path.join(d, f), base)] = (
+                    st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _packed(spark, base: str) -> pd.DataFrame:
+    return (spark.read.parquet(f"{base}/tier_1m_gorilla").toPandas()
+            .sort_values(["source", "chunk_start"]).reset_index(drop=True))
+
+
+def test_verify_resume_leaves_retired_days_retired(spark, tmp_path):
+    """1m days that retention expired are retired: a verifying resume
+    neither recomputes nor audits them, reports no drift and writes no
+    tier file. Audit scope: a 1h day whose 1m source is retired drops out
+    of the 1h census (its 1m partition is gone from the table below), so
+    it is not audited although it stays on disk; the 1d tier still audits
+    that day, since its source — the 1h day — is still held."""
+    raw = token_table(spark, 12000, partitions=5).cache()  # two days
+    base = str(tmp_path / "retired")
+    days = sorted(r[0] for r in raw.select(
+        F.date_format("ts", "yyyy-MM-dd")).distinct().collect())
+    last = datetime.fromisoformat(days[-1])
+    kw = dict(with_digest=False, now=last + timedelta(days=1),
+              horizons={"1m": 1, "1h": 365, "1d": None})
+
+    r1 = run_engine(spark, raw, base, **kw)
+    retired = r1["expired"]["1m"]
+    assert retired and retired == days[:-1]
+    before = _tree_state(base)
+
+    r2 = run_engine(spark, raw, base, verify_resume=True, **kw)
+    for tier in ("1m", "1h", "1d", "1m_gorilla"):
+        assert not r2[tier]["computed"] and not r2[tier]["drifted"], tier
+        held = days if tier == "1d" else days[-1:]
+        assert r2[tier]["skipped"] == held, tier
+    assert r2["expired"]["1m"] == []
+    assert _tree_state(base) == before
+    held_1h = {str(r[0]) for r in spark.read.parquet(f"{base}/tier_1h")
+               .select("part_key").distinct().collect()}
+    assert set(retired) <= held_1h
+    raw.unpersist()
+
+
+def test_packed_tier_is_checkpointed(spark, tmp_path):
+    """tier_1m_gorilla runs as the checkpointed tier "1m_gorilla": a
+    resume does not rewrite it, and a verifying resume flags a corrupted
+    packed day as drifted and re-packs it bit-identically."""
+    raw = token_table(spark, 3000, cadence_s=60).cache()  # three days
+    base = str(tmp_path / "packed")
+    r1 = run_engine(spark, raw, base, with_digest=False)
+    days = r1["1m_gorilla"]["computed"]
+    assert len(days) >= 2 and days == r1["1m"]["computed"]
+    built = _packed(spark, base)
+    assert {
+        r["partition"]: r["rows_out"]
+        for r in CheckpointLog(f"{base}/checkpoint.jsonl").records()
+        if r["tier"] == "1m_gorilla"
+    } == (built.groupby(built["chunk_start"].dt.strftime("%Y-%m-%d"))
+          .size().to_dict())
+    assert built["n_points"].sum() == r1["1m"]["rows_out"]
+
+    before = _tree_state(base)
+    r2 = run_engine(spark, raw, base, with_digest=False)
+    assert not r2["1m_gorilla"]["computed"]
+    assert r2["1m_gorilla"]["skipped"] == days
+    assert _tree_state(base) == before
+
+    # corrupt one packed day: keep all but one of its blobs
+    from tods_spark.sources.storage import PartitionedTable
+
+    victim = days[0]
+    packed = PartitionedTable(spark, f"{base}/tier_1m_gorilla", ["part_key"])
+    rows = packed.read().filter(F.col("part_key") == victim).toPandas()
+    packed.overwrite_partitions(spark.createDataFrame(
+        rows.iloc[1:], schema=packed.read().schema))
+
+    r3 = run_engine(spark, raw, base, with_digest=False, verify_resume=True)
+    assert r3["1m_gorilla"]["drifted"] == [victim]
+    assert r3["1m_gorilla"]["computed"] == [victim]
+    assert not r3["1m"]["computed"]
+    pd.testing.assert_frame_equal(_packed(spark, base), built)
+    raw.unpersist()
+
+
+def test_pack_crash_before_marks_repacks(spark, tmp_path, monkeypatch):
+    """A run that dies after the packed tier's overwrite but before its
+    marks leaves the packed days unmarked: the resume re-packs them (and
+    only them) to the same bytes."""
+    raw = token_table(spark, 3000, cadence_s=60).cache()
+    base = str(tmp_path / "crash")
+    mark = CheckpointLog.mark
+
+    def crash_at_pack_marks(self, **record):
+        if record["tier"] == "1m_gorilla":
+            raise RuntimeError("killed before the pack marks")
+        mark(self, **record)
+
+    monkeypatch.setattr(CheckpointLog, "mark", crash_at_pack_marks)
+    with pytest.raises(RuntimeError, match="pack marks"):
+        run_engine(spark, raw, base, with_digest=False)
+    monkeypatch.undo()
+    written = _packed(spark, base)
+
+    r = run_engine(spark, raw, base, with_digest=False)
+    assert not r["1m"]["computed"] and not r["1d"]["computed"]
+    assert r["1m_gorilla"]["computed"] == r["1m"]["skipped"]
+    pd.testing.assert_frame_equal(_packed(spark, base), written)
+    assert written["n_points"].sum() == spark.read.parquet(
+        f"{base}/tier_1m").count()
+    raw.unpersist()
+
+
+def _tier(spark, base: str, tier: str) -> pd.DataFrame:
+    return (spark.read.parquet(f"{base}/tier_{tier}").toPandas()
+            .sort_values(["source", "window_start"]).reset_index(drop=True))
+
+
+def _day(ts_col: str = "ts"):
+    return F.date_format(ts_col, "yyyy-MM-dd")
+
+
+def test_new_job_on_raw_subset_rebuilds_whole_weeks(spark, tmp_path):
+    """A cascade tier's input is the whole table below, not only the days
+    of this run's raw: a new job_id fed two days of one week still lists
+    every day of tier_1d, so 1w is rebuilt from full weeks (never a
+    partial week's sum), and the 1h/1d/1w lineage equals the first
+    job's."""
+    raw = token_table(spark, 1500, cadence_s=3600).cache()  # ~9 weeks
+    base = str(tmp_path / "subset")
+    kw = dict(with_digest=False, pack=False, with_weekly=True)
+    r1 = run_engine(spark, raw, base, job_id="night-1", **kw)
+    built = _tier(spark, base, "1w")
+    weeks = sorted(str(w) for w in built["part_key"].unique())
+    assert len(weeks) >= 3
+    start = datetime.fromisoformat(weeks[1])
+    subset_days = [(start + timedelta(days=i)).strftime("%Y-%m-%d")
+                   for i in (2, 3)]
+    subset = raw.filter(_day().isin(subset_days))
+
+    r2 = run_engine(spark, subset, base, job_id="night-2", **kw)
+    assert r2["1m"]["computed"] == subset_days
+    for tier in ("1h", "1d", "1w"):
+        assert r2[tier]["computed"] == r1[tier]["computed"], tier
+    pd.testing.assert_frame_equal(_tier(spark, base, "1w"), built)
+
+    def lineage(job: str) -> dict:
+        return {
+            (r["tier"], r["partition"]):
+                (r["rows_in"], r["rows_out"], r["fingerprint"])
+            for r in CheckpointLog(f"{base}/checkpoint.jsonl").records()
+            if r["job_id"] == job and r["tier"] != "1m"
+        }
+
+    assert lineage("night-2") == lineage("night-1")
+    raw.unpersist()
+
+
+def test_resume_builds_cascade_days_raw_no_longer_holds(
+        spark, tmp_path, monkeypatch):
+    """A run that dies after its 1m tier leaves 1h/1d unbuilt. A resume
+    whose raw no longer holds those days still builds them from tier_1m
+    (the census is the table below, not the raw), so the coarser tiers
+    keep those days once 1m expires them."""
+    import tods_spark.pipeline as pipeline
+
+    raw = token_table(spark, 3000, cadence_s=60).cache()  # three days
+    base = str(tmp_path / "crash")
+    run_tier = pipeline.run_tier
+
+    def die_at_1h(*a, **k):
+        if a[6] == "1h":
+            raise RuntimeError("killed after the 1m tier")
+        return run_tier(*a, **k)
+
+    monkeypatch.setattr(pipeline, "run_tier", die_at_1h)
+    with pytest.raises(RuntimeError, match="after the 1m tier"):
+        run_engine(spark, raw, base, with_digest=False, pack=False)
+    monkeypatch.undo()
+    days = sorted(r[0] for r in raw.select(_day()).distinct().collect())
+    assert len(days) >= 2
+
+    r = run_engine(spark, raw.filter(_day() == days[-1]), base,
+                   with_digest=False, pack=False)
+    assert r["1m"]["skipped"] == days[-1:] and not r["1m"]["computed"]
+    assert r["1h"]["computed"] == days and r["1d"]["computed"] == days
+
+    full = str(tmp_path / "full")
+    run_engine(spark, raw, full, with_digest=False, pack=False)
+    for tier in ("1h", "1d"):
+        pd.testing.assert_frame_equal(_tier(spark, base, tier),
+                                      _tier(spark, full, tier))
+    raw.unpersist()
+
+
+def test_run_engine_repacks_days_a_refresh_changed(spark, tmp_path):
+    """refresh_engine merges late rows into tier_1m but does not re-pack.
+    Each packed record carries the fingerprint of the 1m day it packed,
+    so the next run_engine re-packs exactly the refreshed day, to what
+    packing the current tier_1m gives."""
+    from tods_spark.operators import compression
+    from tods_spark.pipeline import refresh_engine
+
+    raw = token_table(spark, 3000, cadence_s=60).cache()  # three days
+    days = sorted(r[0] for r in raw.select(_day()).distinct().collect())
+    doc_n = F.substring("doc_id", 5, 15).cast("long")  # "doc-%012d" ids
+    is_late = (doc_n % 13 == 0) & (_day() == days[1])
+    on_time, late = raw.filter(~is_late), raw.filter(is_late)
+    base = str(tmp_path / "refresh")
+
+    run_engine(spark, on_time, base, with_digest=False)
+    assert refresh_engine(spark, late, base)["1m"]["refreshed"] == days[1:2]
+    r = run_engine(spark, on_time, base, with_digest=False)
+    assert not r["1m"]["computed"] and not r["1h"]["computed"]
+    assert r["1m_gorilla"]["computed"] == days[1:2]
+
+    fresh = (compression.pack_tier(
+        spark.read.parquet(f"{base}/tier_1m").drop("part_key"),
+        value_col="avg_n_tok").toPandas()
+        .sort_values(["source", "chunk_start"]).reset_index(drop=True))
+    pd.testing.assert_frame_equal(_packed(spark, base).drop(
+        columns="part_key"), fresh)
     raw.unpersist()

@@ -6,9 +6,9 @@ on a cluster).
       → (optional) timestamp dedup               operators/validation
       → 1m rollup (algebraic + digest)           operators/rollup
       → 1h, 1d cascade                           operators/rollup
-      each tier: checkpointed partition write    plans/checkpoint, sources/storage
-      → tumbling gap-fill view of each tier      operators/gapfill
-      → Gorilla pack of each tier                operators/compression
+      → (optional) 1w cascade                    operators/rollup
+      → Gorilla pack of the 1m tier              operators/compression
+      each of these: checkpointed partition write  plans/checkpoint, sources/storage
       → retention expiry per tier                plans/retention
 
 Every stage is resumable: re-running `run_engine` after a crash skips
@@ -50,7 +50,25 @@ def run_engine(
     with_weekly: bool = False,
 ) -> dict:
     """Run the full cascade with checkpointed writes; returns per-tier
-    stats {tier: {"computed": [...], "skipped": [...], "rows_out": n}}.
+    stats {tier: run_tier's report} for 1m, 1h, 1d, 1w (with_weekly) and
+    1m_gorilla (pack), plus "expired" (with `now`) and "compacted".
+
+    Each tier runs through `run_tier`. Only 1m launches a census job (on
+    the raw input); every later tier reads the whole table below, and
+    takes its census ({day: rows}) from that table's Parquet footers
+    (`PartitionedTable.row_counts`), so it starts no Spark job before its
+    write. The Gorilla pack is the checkpointed tier "1m_gorilla" (one
+    blob per source-day, keyed by the day of chunk_start), fed by the 1m
+    census: a resume skips days already packed, with verify_resume
+    re-packs a drifted one, and it re-packs a day whose 1m content
+    changed since its pack (a refresh_engine merge).
+
+    Retention marks the partitions it drops 'expired'; `run_tier` treats
+    those as retired, so a later run — verify_resume included — neither
+    recomputes nor audits them. A day retired from tier N is gone from
+    its table, so it drops out of tier N+1's census and is neither
+    computed nor audited there either (the 1h/1d partitions themselves
+    stay on disk until their own horizon). The packed tier is not expired.
 
     dedup: None | 'first' | 'average' — drop duplicate timestamps per key
     before the rollup (DuplicationValidation semantics, the F0 generator
@@ -79,61 +97,48 @@ def run_engine(
         raw_to_1m = lambda df: rollup_raw(  # noqa: E731
             df, "1m", value_col=value_col, keys=keys, with_digest=False
         )
-    t1m_table = PartitionedTable(spark, f"{base_dir}/tier_1m", ["part_key"])
+
+    def table(name: str) -> PartitionedTable:
+        return PartitionedTable(spark, f"{base_dir}/tier_{name}", ["part_key"])
+
+    tables = {"1m": table("1m")}
     report["1m"] = run_tier(
-        spark, raw_df, raw_to_1m, t1m_table, ckpt, job_id, "1m", in_ts_col="ts",
-        verify_resume=verify_resume,
+        spark, raw_df, raw_to_1m, tables["1m"], ckpt, job_id, "1m",
+        in_ts_col="ts", verify_resume=verify_resume,
     )
-
-    t1m = t1m_table.read()
-    t1h_table = PartitionedTable(spark, f"{base_dir}/tier_1h", ["part_key"])
-    report["1h"] = run_tier(
-        spark, t1m.drop("part_key"),
-        lambda df: rollup_cascade(df, "1m", "1h", keys=keys),
-        t1h_table, ckpt, job_id, "1h", in_ts_col="window_start",
-        verify_resume=verify_resume,
-    )
-
-    t1h = t1h_table.read()
-    t1d_table = PartitionedTable(spark, f"{base_dir}/tier_1d", ["part_key"])
-    report["1d"] = run_tier(
-        spark, t1h.drop("part_key"),
-        lambda df: rollup_cascade(df, "1h", "1d", keys=keys),
-        t1d_table, ckpt, job_id, "1d", in_ts_col="window_start",
-        verify_resume=verify_resume,
-    )
-
-    tier_tables = [("1m", t1m_table), ("1h", t1h_table), ("1d", t1d_table)]
-    if with_weekly:
-        t1w_table = PartitionedTable(spark, f"{base_dir}/tier_1w",
-                                     ["part_key"])
-        report["1w"] = run_tier(
-            spark, t1d_table.read().drop("part_key"),
-            lambda df: rollup_cascade(df, "1d", "1w", keys=keys),
-            t1w_table, ckpt, job_id, "1w", in_ts_col="window_start",
-            verify_resume=verify_resume,
+    cascade = [("1m", "1h"), ("1h", "1d")] + ([("1d", "1w")] if with_weekly
+                                             else [])
+    for src, tier in cascade:
+        tables[tier] = table(tier)
+        report[tier] = run_tier(
+            spark, tables[src].read().drop("part_key"),
+            lambda df, src=src, tier=tier: rollup_cascade(
+                df, src, tier, keys=keys),
+            tables[tier], ckpt, job_id, tier, in_ts_col="window_start",
+            verify_resume=verify_resume, census=tables[src].row_counts(),
         )
-        tier_tables.append(("1w", t1w_table))
 
     if pack:
-        packed = compression.pack_tier(
-            t1m_table.read().drop("part_key"), value_col="avg_n_tok", keys=keys
-        ).withColumn("part_key", F.date_format("chunk_start", "yyyy-MM-dd"))
-        PartitionedTable(
-            spark, f"{base_dir}/tier_1m_gorilla", ["part_key"]
-        ).overwrite_partitions(packed)
+        report["1m_gorilla"] = run_tier(
+            spark, tables["1m"].read().drop("part_key"),
+            lambda df: compression.pack_tier(
+                df, value_col="avg_n_tok", keys=keys),
+            table("1m_gorilla"), ckpt, job_id, "1m_gorilla",
+            in_ts_col="window_start", out_ts_col="chunk_start",
+            verify_resume=verify_resume, census=tables["1m"].row_counts(),
+            source_tier="1m",
+        )
 
     if compact:
         # maintenance pass: merge per-run small files tier by tier (no-op
         # for partitions already at <=2 files)
-        for tier, table in tier_tables:
-            done = table.compact()
-            report.setdefault("compacted", {})[tier] = done
+        for tier, tbl in tables.items():
+            report.setdefault("compacted", {})[tier] = tbl.compact()
 
     if now is not None:
-        for tier, table in tier_tables:
+        for tier, tbl in tables.items():
             dropped = expire_partitions(
-                table, tier, now, horizons.get(tier), ckpt, job_id=job_id
+                tbl, tier, now, horizons.get(tier), ckpt, job_id=job_id
             )
             report.setdefault("expired", {})[tier] = dropped
     return report

@@ -16,13 +16,30 @@ Design:
     rows — computed from a read-back of the written bytes, so resume-time
     drift in any single partition is detectable), plus status and wall
     seconds;
-  * `run_tier` lists partitions already 'done' for (job_id, tier), filters
-    them OUT of the input (partition pruning — the filter lands on the
-    parquet scan), computes the rest, writes results with dynamic partition
-    overwrite (idempotent), then marks them done;
+  * `run_tier` takes the input's partition census ({partition: rows in})
+    from ONE groupBy job, or from the caller when it already holds it: a
+    cascade tier's input is the whole table below, whose census the
+    Parquet footers give without a Spark job (`PartitionedTable.
+    row_counts`), so run_engine hands it up (1m→1h→1d→1w and
+    1m→1m_gorilla) and those tiers launch no Spark job before their write;
+  * it skips partitions already 'done' for (job_id, tier), filters the
+    rest IN (partition pruning — the filter lands on the parquet scan),
+    computes them, writes results with dynamic partition overwrite
+    (idempotent), then marks them done;
+  * a partition whose newest record is 'expired' (plans/retention) is
+    retired: it is neither recomputed, skipped nor audited, so a resume
+    does not rebuild what retention dropped on purpose;
   * a crash between "write" and "mark" re-runs that partition; the
     partition overwrite converges to the same bytes, so resume is exactly-
     once in effect (at-least-once execution, idempotent apply).
+
+The Gorilla-packed 1m tier ("1m_gorilla", keyed by the day of its
+`chunk_start`) runs through the same runner, so it has lineage and
+fingerprints too: a resume skips days already packed and re-packs a
+drifted one. Its records also carry the fingerprint of the 1m day they
+packed (`source_tier`), so a day whose 1m partition was rewritten since
+— refresh_engine merges late data into 1m without re-packing — is
+re-packed by the next run.
 
 The checkpoint table itself is tiny (one row per partition per tier) and is
 stored as JSON lines appended atomically per run — on a cluster this becomes
@@ -57,6 +74,26 @@ class CheckpointLog:
             r["partition"]
             for r in self.records()
             if r["job_id"] == job_id and r["tier"] == tier and r["status"] == "done"
+        }
+
+    def latest_records(self, job_id: str, tier: str) -> dict[str, dict]:
+        """{partition: its newest 'done' or 'expired' record} for (job_id,
+        tier); the log is append-only, so file order is time order."""
+        return {
+            r["partition"]: r
+            for r in self.records()
+            if r["job_id"] == job_id and r["tier"] == tier
+            and r["status"] in ("done", "expired")
+        }
+
+    def newest_fingerprints(self, tier: str) -> dict[str, int]:
+        """{partition: fingerprint of its newest 'done' record} for `tier`
+        over every job_id — what the tier's table holds now, whichever job
+        (a build, a refresh) wrote it last."""
+        return {
+            r["partition"]: r["fingerprint"]
+            for r in self.records()
+            if r["tier"] == tier and r["status"] == "done"
         }
 
     def mark(self, **record) -> None:
@@ -104,12 +141,32 @@ def run_tier(
     out_ts_col: str = "window_start",
     partition_col: str = "part_key",
     verify_resume: bool = False,
+    census: dict[str, int] | None = None,
+    source_tier: str | None = None,
 ) -> dict:
     """Run one rollup tier with per-partition lineage + resume.
 
     The coarse partition key is the DAY of the event time — derived from
     `in_ts_col` on the input and `out_ts_col` on the output (a tier never
     maps an input day to a different output day for tiers ≤ 1d).
+
+    census: {input partition: input rows}, exactly what a
+    `groupBy(partition).count()` of the input returns. Pass it when the
+    caller already holds it — a cascade tier's input is a whole
+    PartitionedTable, whose `row_counts()` read it from the Parquet
+    footers — and the tier launches no Spark job before its write.
+    Without it, one groupBy job computes it.
+
+    A partition whose newest record for (job_id, tier) is 'expired' is
+    retired: retention dropped it on purpose, so it is neither computed,
+    skipped nor audited.
+
+    source_tier: the checkpointed tier the input is read from. Each record
+    then also carries its source partition's newest fingerprint
+    (`CheckpointLog.newest_fingerprints`), and a 'done' partition whose
+    source has been rewritten with other content since is recomputed.
+    Only for a tier its source's writers do not re-derive themselves (the
+    Gorilla pack: refresh_engine re-merges 1m days but does not re-pack).
 
     verify_resume=True audits every 'done' partition before trusting it:
     the WRITTEN bytes are re-fingerprinted (one groupBy over the pruned
@@ -121,36 +178,42 @@ def run_tier(
     Returns {"computed": [...], "skipped": [...], "drifted": [...],
     "rows_out": n}.
     """
-    in_expr = F.date_format(in_ts_col, "yyyy-MM-dd")
-    out_expr = F.date_format(out_ts_col, "yyyy-MM-dd")
-    inp = input_df.withColumn(partition_col, in_expr)
-
-    all_parts = [
-        r[partition_col]
-        for r in inp.select(partition_col).distinct().collect()
+    inp = input_df.withColumn(
+        partition_col, F.date_format(in_ts_col, "yyyy-MM-dd")
+    )
+    if census is None:
+        census = {
+            r[partition_col]: int(r["count"])
+            for r in inp.groupBy(partition_col).count().collect()
+        }
+    latest = ckpt.latest_records(job_id, tier)
+    source_fp = ckpt.newest_fingerprints(source_tier) if source_tier else {}
+    parts = sorted(
+        p for p in census
+        if latest.get(p, {}).get("status") != "expired"
+    )
+    # done, and (with source_tier) made from the source's current content
+    skipped = [
+        p for p in parts
+        if p in latest
+        and latest[p].get("source_fingerprint") == source_fp.get(p)
     ]
-    done = ckpt.done_partitions(job_id, tier)
-    todo = sorted(p for p in all_parts if p not in done)
-    skipped = sorted(p for p in all_parts if p in done)
+    todo = [p for p in parts if p not in skipped]
     drifted: list[str] = []
 
     if verify_resume and skipped and out_table.exists():
-        recorded = {
-            r["partition"]: (r["rows_out"], r["fingerprint"])
-            for r in ckpt.records()
-            if r["job_id"] == job_id and r["tier"] == tier
-            and r["status"] == "done"
-        }
         written = out_table.read().filter(
             F.col(partition_col).isin(skipped)
         )
         actual = _per_partition_stats(written, partition_col)
-        for p in skipped:
-            # a legitimately-empty partition has NO group in the read-back
-            # stats but was recorded as (0, 0) — default the read-back side
-            # so it isn't flagged drifted (and recomputed) on every resume
-            if actual.get(p, (0, 0)) != recorded.get(p):
-                drifted.append(p)
+        # a legitimately-empty partition has NO group in the read-back
+        # stats but was recorded as (0, 0) — default the read-back side
+        # so it isn't flagged drifted (and recomputed) on every resume
+        drifted = [
+            p for p in skipped
+            if actual.get(p, (0, 0))
+            != (latest[p]["rows_out"], latest[p]["fingerprint"])
+        ]
         if drifted:
             todo = sorted(todo + drifted)
             skipped = [p for p in skipped if p not in drifted]
@@ -158,19 +221,11 @@ def run_tier(
     rows_out_total = 0
     if todo:
         run_id = uuid.uuid4().hex[:12]
+        t0 = time.time()
         # partition-pruned input: the IN filter pushes to the scan
         pending = inp.filter(F.col(partition_col).isin(todo))
-        # per-partition input row counts (lineage contract: each checkpoint
-        # record carries ITS partition's metrics, not run-wide totals)
-        rows_in = {
-            r[partition_col]: int(r["n"])
-            for r in pending.groupBy(partition_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        t0 = time.time()
         result = compute(pending.drop(partition_col)).withColumn(
-            partition_col, out_expr
+            partition_col, F.date_format(out_ts_col, "yyyy-MM-dd")
         )
         snapshot_id = out_table.overwrite_partitions(result)
         wall = time.time() - t0
@@ -184,10 +239,15 @@ def run_tier(
         )
         for p in todo:
             n_out, fp = stats.get(p, (0, 0))
+            # lineage contract: each record carries ITS partition's
+            # metrics, not run-wide totals
+            source = ({"source_fingerprint": source_fp.get(p)}
+                      if source_tier else {})
             ckpt.mark(
                 job_id=job_id, tier=tier, partition=p, run_id=run_id,
-                rows_in=int(rows_in.get(p, 0)), rows_out=n_out,
+                rows_in=census[p], rows_out=n_out,
                 fingerprint=fp, status="done", wall_s=round(wall, 3),
+                **source,
             )
             rows_out_total += n_out
     return {"computed": todo, "skipped": skipped, "drifted": drifted,

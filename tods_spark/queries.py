@@ -41,6 +41,14 @@ _READ_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _read_cached(spark: SparkSession, path: str) -> DataFrame:
+    """Session-scoped handle of the parquet table at ``path``.
+
+    Invariant: the data at ``path`` is static for the life of ``spark``.
+    The handle pins the file listing and schema resolved on first use, so
+    a path rewritten in-session gives FileNotFound or a stale file index.
+    Callers that regenerate data at a path must use ``spark.read.parquet``
+    (or a fresh session) instead.
+    """
     per_session = _READ_MEMO.setdefault(spark, {})
     df = per_session.get(path)
     if df is None:

@@ -14,6 +14,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",                       # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",     # cgroup v1
+)
+
+
+def _default_cores() -> int:
+    """CPUs this process may run on (its affinity mask, not the box)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _default_driver_mem() -> str:
+    """A quarter of the memory this process may use — the cgroup limit,
+    else /proc/meminfo's MemTotal (the smaller when both are set; an
+    unlimited cgroup reads as "max" or a near-2^63 number) — between 1 GB
+    and 24 GB. The rest stays for the Python workers and the page cache."""
+    limits = []
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():
+            limits.append(int(value))
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                limits.append(int(line.split()[1]) * 1024)
+    mb = (min(limits) // 4) >> 20
+    return f"{min(max(mb, 1024), 24 * 1024)}m"
+
 
 def get_spark(
     app_name: str = "tods_spark",
@@ -24,7 +56,8 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for the rollup engine.
 
     ``cores``: int N -> local[N]; "*" -> local[*]; None -> $SPARK_GRAFT_CPUS
-    or local[*].
+    or the CPUs in this process's affinity mask. The driver heap is
+    $SPARK_GRAFT_DRIVER_MEM or ``_default_driver_mem()``.
     """
     # glibc tuning for Arrow/numpy workers: without it every large numpy
     # allocation mmaps fresh pages and pays first-touch page faults (measured
@@ -35,9 +68,11 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or _default_cores()
     master = f"local[{cores}]"
-    n_cores = os.cpu_count() or 8 if cores == "*" else int(cores)
+    n_cores = _default_cores() if cores == "*" else int(cores)
+    driver_mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                  or _default_driver_mem())
     if shuffle_partitions is None:
         # local mode: ~cores; a real cluster would start higher and let
         # AQE coalesce (spark.sql.adaptive.coalescePartitions).
@@ -57,7 +92,7 @@ def get_spark(
         # 33% vs 10k at 16M rows (and larger batches shuffle FEWER partial
         # rows); ~3 MB/batch of (key, ts, value) stays tiny per worker
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         # pin -Xms to -Xmx: G1 otherwise uncommits heap regions between
         # (and size it to the JOB, not the box: a pinned 48g heap costs
         # ~20s of extra first-touch faults per JVM on this kernel vs 24g —
@@ -68,7 +103,7 @@ def get_spark(
         # (measured: 32-thread tier write 59s unpinned vs 13s pinned)
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            "-Xms" + driver_mem,
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -20,6 +20,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _partition_values(p: str) -> dict[str, str | None]:
+    """{column: value} of a partition dir path ("day=3/hour=4"). Hive
+    escapes special chars as %XX and spells SQL NULL as
+    __HIVE_DEFAULT_PARTITION__ — unescape so filters and joins match the
+    actual column values, not the dir names."""
+    from urllib.parse import unquote
+
+    out = {}
+    for seg in p.split(os.sep):
+        col, _, val = seg.partition("=")
+        out[col] = (None if val == "__HIVE_DEFAULT_PARTITION__"
+                    else unquote(val))
+    return out
+
+
 class PartitionedTable:
     """A partitioned Parquet table with Iceberg-like partition overwrite."""
 
@@ -96,22 +111,38 @@ class PartitionedTable:
         rows = self.read().select(*self.partition_cols).distinct().collect()
         return [r.asDict() for r in rows]
 
+    def _data_files(self):
+        """(partition dir, [parquet file paths]) per leaf partition."""
+        for root, _dirs, files in os.walk(self.path):
+            data = [os.path.join(root, f) for f in files
+                    if not f.startswith(("_", ".")) and f.endswith(".parquet")]
+            if data:
+                yield os.path.relpath(root, self.path), data
+
     def file_report(self) -> list[dict]:
         """(partition dir, n_files, bytes) per leaf partition — the input to
         a compaction decision. Filesystem metadata only, no Spark job."""
-        out = []
-        for root, _dirs, files in os.walk(self.path):
-            data = [f for f in files
-                    if not f.startswith(("_", ".")) and f.endswith(".parquet")]
-            if data:
-                out.append({
-                    "partition": os.path.relpath(root, self.path),
-                    "n_files": len(data),
-                    "bytes": sum(
-                        os.path.getsize(os.path.join(root, f)) for f in data
-                    ),
-                })
+        out = [
+            {"partition": part, "n_files": len(data),
+             "bytes": sum(os.path.getsize(f) for f in data)}
+            for part, data in self._data_files()
+        ]
         return sorted(out, key=lambda r: r["partition"])
+
+    def row_counts(self) -> dict:
+        """{partition value: rows} of a table partitioned by one column,
+        summed from the Parquet footers — filesystem metadata only, no
+        Spark job. Equals a groupBy(partition).count() of `read()`: a
+        partition holding no rows is absent."""
+        import pyarrow.parquet as pq
+
+        (col,) = self.partition_cols
+        counts = {}
+        for part, data in self._data_files():
+            n = sum(pq.read_metadata(f).num_rows for f in data)
+            if n:
+                counts[_partition_values(part)[col]] = n
+        return counts
 
     def compact(self, target_bytes: int = 128 * 1024 * 1024,
                 min_files: int = 2) -> dict:
@@ -150,25 +181,12 @@ class PartitionedTable:
         # of per-partition AND-conjunctions (NOT per-column isin sets: those
         # select the CROSS PRODUCT of values and dynamic overwrite would
         # silently rewrite untouched partitions outside the todo set)
-        def part_kv(p: str) -> dict[str, str | None]:
-            # Hive escapes special chars as %XX and spells SQL NULL as
-            # __HIVE_DEFAULT_PARTITION__ — unescape so the filter and the
-            # nout join match the actual column values, not the dir names
-            from urllib.parse import unquote
-
-            out = {}
-            for seg in p.split(os.sep):
-                col, _, val = seg.partition("=")
-                out[col] = (None if val == "__HIVE_DEFAULT_PARTITION__"
-                            else unquote(val))
-            return out
-
         def part_cond(p: str):
             return reduce(
                 lambda a, b: a & b,
                 [
                     F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                    for c, v in part_kv(p).items()
+                    for c, v in _partition_values(p).items()
                 ],
             )
 
@@ -180,7 +198,8 @@ class PartitionedTable:
         # oversized one splits into exactly its own ceil(bytes/target)
         cols = [df.schema[c].dataType for c in self.partition_cols]
         nout_rows = [
-            tuple(part_kv(p)[c] for c in self.partition_cols) + (n_target(r),)
+            tuple(_partition_values(p)[c] for c in self.partition_cols)
+            + (n_target(r),)
             for p, r in todo.items()
         ]
         nout_df = self.spark.createDataFrame(

@@ -64,7 +64,7 @@ convoy-free estimator:
 
 Methodology otherwise unchanged from v2 (recorded in BENCH/BASELINE.md):
   * input is a parquet table generated ONCE (untimed); the timed job is
-    scan -> 1m rollup (map-side partial digests — the engine default)
+    scan -> 1m rollup (quantile digests, the engine default)
     -> 1h -> 1d -> gap-fill -> Gorilla pack;
   * warm-up runs per JVM repeat until one completes on a quiet window
     (round-5 session H showed a single warm-up can leave the hi JVM
@@ -154,7 +154,7 @@ import os, tempfile
 from pyspark.sql import functions as F
 from tods_spark.session import get_spark
 from tods_spark.operators.rollup import (AGG_COLS, rollup_cascade,
-                                         rollup_raw_partial_digest)
+                                         rollup_raw)
 from tods_spark.operators import compression, gapfill
 
 path, cores = sys.argv[1], int(sys.argv[2])
@@ -188,7 +188,7 @@ def job():
 
     with tempfile.TemporaryDirectory() as td:
         t1m_path = os.path.join(td, "tier_1m.parquet")
-        timed("w1m", lambda: rollup_raw_partial_digest(raw, "1m")
+        timed("w1m", lambda: rollup_raw(raw, "1m", with_digest=True)
               .write.mode("overwrite").parquet(t1m_path))
         t1m = spark.read.parquet(t1m_path)
         rows = {}

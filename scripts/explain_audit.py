@@ -112,8 +112,8 @@ def main() -> None:
     plan = QUERIES["timeseries_split_5fold"](spark, SF)._jdf.queryExecution().executedPlan().toString()
     check("timeseries split has no Window operator", "Window" not in plan)
 
-    # 10. the default digest cascade never ships raw values through the
-    #     shuffle: no collect_list over the raw scan (partials only)
+    # 10. the 1m digest is one JVM expression: no Python evaluation node
+    #     (Arrow/batch eval, *InPandas/*InArrow) anywhere in its plan
     from tods_spark.operators.rollup import full_cascade
 
     with tempfile.TemporaryDirectory() as td:
@@ -121,12 +121,10 @@ def main() -> None:
         t1m = full_cascade(spark.read.parquet(f"{td}/tok"),
                            with_digest=True)["1m"]
         plan = t1m._jdf.queryExecution().executedPlan().toString()
-        # the collect-path signature is sort_array(collect_list(<raw value>));
-        # the partial path shows a MapInPandas stage before the shuffle (its
-        # reduce still collect_lists the per-batch digest STRUCTS — that is
-        # O(batches), not O(rows), and is fine)
-        check("digest cascade default is map-side partial (no raw collect_list)",
-              "sort_array(collect_list" not in plan and "MapInPandas" in plan)
+        check("1m digest plan has no Python evaluation node",
+              "qdigest" in plan
+              and not _re.search(r"EvalPython|InPandas|InArrow|PythonUDF",
+                                 plan))
 
     # 11. quadratic detector kernels shuffle on the TIME-BOUNDED key: the
     #     grouped-map exchange must hash on (event_type, day), never

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from tods_spark.datagen import gen_pandas, token_table
 from tods_spark.functions import sketches
@@ -153,33 +154,78 @@ def test_merge_digest_series_matches_per_row_kernel():
         np.testing.assert_array_equal(np.asarray(g), want)
 
 
-def test_partial_digest_rollup_equivalent(spark):
-    """Map-side partial digest path: identical algebraic state to the
-    collect_list path, digests rank-equivalent (exact at small windows)."""
-    from tods_spark.operators.rollup import rollup_raw_partial_digest
+# window sizes around the exact/grid boundary (K+1 = 65) and well above it
+DIGEST_SIZES = (1, 2, 64, 65, 66, 67, 129, 1000, 5000)
 
-    n = 3000
-    raw = token_table(spark, n, partitions=6)
-    a = (
-        full_cascade(raw, with_digest=True, digest_mode="collect")["1m"]
-        .orderBy("source", "window_start")
-        .toPandas()
+
+def _digest_windows(spark, sizes=DIGEST_SIZES, minute0=0):
+    """Raw rows with one (source, 1m window) per (size, value kind): ties
+    (small integers) and fractional values of both signs. Returns the
+    frame and {window index: values}."""
+    rng = np.random.default_rng(11)
+    base = pd.Timestamp("2024-01-01")
+    parts, vals = [], {}
+    for i, (n, kind) in enumerate(
+            (n, kind) for n in sizes for kind in ("ties", "frac")):
+        if kind == "ties":
+            v = rng.integers(-20, 20, n).astype(float)
+        else:
+            v = np.round(rng.normal(0, 50, n), 2) + 0.0  # no -0.0
+        vals[minute0 + i] = v
+        parts.append(pd.DataFrame({
+            "source": f"w{minute0 + i}",
+            "ts": base + pd.to_timedelta(minute0 + i, "min")
+            + pd.to_timedelta(np.arange(n) % 60, "s"),
+            "v": v,
+        }))
+    return spark.createDataFrame(pd.concat(parts, ignore_index=True)), vals
+
+
+def _digests(tier_df) -> dict[int, bytes]:
+    pdf = tier_df.select("source", "qdigest").toPandas()
+    return {int(s[1:]): np.asarray(d, np.float64).tobytes()
+            for s, d in zip(pdf["source"], pdf["qdigest"])}
+
+
+def test_digest_expr_bit_exact_to_digest_from_values(spark):
+    """The 1m digest (one JVM expression) has exactly the bytes of
+    sketches.digest_from_values for the window's values, on both sides of
+    the K+1 boundary, with ties, fractions and negative values."""
+    from tods_spark.operators.rollup import rollup_raw
+
+    raw, vals = _digest_windows(spark)
+    got = _digests(rollup_raw(raw, "1m", value_col="v", with_digest=True))
+    assert set(got) == set(vals)
+    for i, v in vals.items():
+        assert got[i] == sketches.digest_from_values(v).tobytes(), (i, len(v))
+
+
+def test_digest_bytes_independent_of_partitioning(spark):
+    from tods_spark.operators.rollup import rollup_raw
+
+    raw, _ = _digest_windows(spark)
+    one, seven = (
+        _digests(rollup_raw(raw.repartition(n), "1m", value_col="v",
+                            with_digest=True))
+        for n in (1, 7)
     )
-    b = (
-        rollup_raw_partial_digest(raw, "1m")
-        .orderBy("source", "window_start")
-        .toPandas()
-    )
-    assert len(a) == len(b)
-    for c in ("cnt", "sum_n_tok", "min_n_tok", "max_n_tok", "avg_n_tok",
-              "sum_sq_n_tok"):
-        np.testing.assert_allclose(a[c], b[c], rtol=1e-12, err_msg=c)
-    # digests: identical when the window fits one Arrow batch & count <= K
-    # (the common case here); otherwise rank-equivalent — check medians agree
-    for da, db, cnt in zip(a["qdigest"], b["qdigest"], a["cnt"]):
-        qa = sketches.digest_quantile(np.asarray(da, float), 0.5)
-        qb = sketches.digest_quantile(np.asarray(db, float), 0.5)
-        np.testing.assert_allclose(qa, qb, rtol=1e-9)
+    assert one == seven
+
+
+def test_refresh_late_batch_digest_is_the_build_expression(spark):
+    """refresh_tier builds the late batch's digests with the same
+    expression: a window only the late batch holds gets
+    digest_from_values' bytes."""
+    from tods_spark.operators.rollup import refresh_tier, rollup_raw
+
+    tier_raw, _ = _digest_windows(spark, sizes=(3, 70))
+    late, vals = _digest_windows(spark, sizes=(67, 1000), minute0=10)
+    tier = rollup_raw(tier_raw, "1m", value_col="v", with_digest=True)
+    got = _digests(refresh_tier(tier, late, "1m", value_col="v")
+                   .where(F.col("window_start") >= "2024-01-01 00:10:00"))
+    assert set(got) == set(vals)
+    for i, v in vals.items():
+        assert got[i] == sketches.digest_from_values(v).tobytes(), (i, len(v))
 
 
 def test_weekly_tier_cascade_equals_direct(spark):

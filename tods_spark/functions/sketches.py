@@ -14,13 +14,21 @@ result is again a K+1 grid, so merging is associative enough for tier
 cascades; max rank error per merge level is O(1/K) (~1.6% at K=64),
 documented here as the engine's sketch error bound.
 
-All kernels are vectorized numpy invoked from pandas/Arrow UDFs — no per-row
-Python (driver rule).
+`digest_from_values` is the build SPEC: a 1m digest is exactly its bytes
+for the window's values, whatever the partitioning. The engine evaluates it
+in the JVM (`digest_expr`, one expression over `sort_array(collect_list)`;
+no Python worker), bit-exact to the numpy kernel. Earlier versions built
+over-K windows from per-Arrow-batch partial grids, which differed from the
+spec by up to ~1e-11 depending on batch layout; windows of at most K+1
+values were and are bit-identical. The merge kernels (`merge_digests`,
+`merge_digest_series`) are vectorized numpy invoked from pandas/Arrow UDFs
+— no per-row Python (driver rule).
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column, functions as F
 
 K_DEFAULT = 64
 
@@ -37,6 +45,36 @@ def digest_from_values(values: np.ndarray, k: int = K_DEFAULT) -> np.ndarray:
     if v.size <= k + 1:
         return np.sort(v)
     return np.quantile(v, np.linspace(0.0, 1.0, k + 1))
+
+
+def digest_expr(vals: Column, k: int = K_DEFAULT) -> Column:
+    """`digest_from_values` as one JVM expression over an ascending-sorted
+    array<double> (`sort_array(collect_list(v))`), bit-exact to it: numpy's
+    'linear' quantile at the linspace grid — virtual index (n-1)·q, floor,
+    gamma against the clamped lower index, and `_lerp`'s rule (b - d·(1-t)
+    when t >= 0.5, else a + d·t) — written as a `transform` over the grid
+    literals. A NaN value (sorted last) turns an over-K grid all-NaN, as
+    np.quantile does."""
+    n = F.size(vals)
+    nan = F.array_repeat(F.lit(float("nan")), k + 1)
+    grid = F.array(*[F.lit(float(q)) for q in np.linspace(0.0, 1.0, k + 1)])
+
+    def at(q: Column) -> Column:
+        vi = (n - 1).cast("double") * q
+        top = vi >= n - 1
+        lo = F.when(top, n - 1).otherwise(F.floor(vi))
+        hi = F.when(top, lo).otherwise(lo + 1)
+        # numpy takes gamma against the lower index as it indexes, i.e. -1
+        # (the last value) at the top
+        t = vi - F.when(top, F.lit(-1)).otherwise(lo)
+        a, b = vals[lo], vals[hi]
+        d = b - a
+        return F.when(t >= 0.5, b - d * (1 - t)).otherwise(a + d * t)
+
+    return (F.when(n == 0, nan)
+            .when(n <= k + 1, vals)
+            .when(F.isnan(F.element_at(vals, -1)), nan)
+            .otherwise(F.transform(grid, at)))
 
 
 def merge_digests(

@@ -14,9 +14,9 @@ tier-to-tier (never recomputed from raw):
 
 Scale notes (10^12 sequences, 1000 executors):
   * raw→1m is ONE shuffle on (source, minute) with map-side partial
-    aggregation; the digest is built per-group in an `applyInPandas` stage
-    AFTER the cheap algebraic agg only when requested, so the common path is
-    pure Tungsten whole-stage codegen.
+    aggregation; when requested, the digest is a JVM expression over the
+    window's sorted values (`collect_list` ships each raw value through
+    that shuffle, 8 bytes a row), so raw→1m runs without a Python worker.
   * the heavy `source` key ("web" ≈ 70% of rows) makes (source) alone a skew
     bomb; the group key always includes the window, which spreads hot sources
     across time — plus AQE skew handling and optional salting (operators/skew)
@@ -62,10 +62,15 @@ def rollup_raw(
     keys: tuple[str, ...] = ("source",),
     with_digest: bool = False,
 ) -> DataFrame:
-    """raw → first tier. One shuffle, algebraic aggs, codegen'd end to end."""
+    """raw → first tier. One shuffle, algebraic aggs, all in the JVM.
+
+    with_digest adds ``qdigest``: the window's values collected and sorted
+    after the shuffle, then `sketches.digest_expr` — bit-exact to
+    `sketches.digest_from_values` and independent of partitioning (its
+    higher-order functions run interpreted; the rest stays codegen'd)."""
     interval = TIER_INTERVAL[tier]
     v = F.col(value_col).cast("double")
-    out = (
+    return (
         df.groupBy(*keys, F.window(ts_col, interval).alias("w"))
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -89,133 +94,12 @@ def rollup_raw(
             "max_n_tok",
             (F.col("sum_n_tok") / F.col("cnt")).alias("avg_n_tok"),
             "sum_sq_n_tok",
-            *(["_vals"] if with_digest else []),
+            *(
+                [sketches.digest_expr(F.col("_vals")).alias("qdigest")]
+                if with_digest
+                else []
+            ),
         )
-    )
-    if with_digest:
-        k = sketches.K_DEFAULT
-
-        @F.pandas_udf("array<double>")
-        def build_digest(vals: pd.Series) -> pd.Series:
-            return vals.map(
-                lambda a: sketches.digest_from_values(np.asarray(a, float), k)
-            )
-
-        out = out.withColumn("qdigest", build_digest("_vals")).drop("_vals")
-    return out
-
-
-def rollup_raw_partial_digest(
-    df: DataFrame,
-    tier: str = "1m",
-    ts_col: str = "ts",
-    value_col: str = "n_tok",
-    keys: tuple[str, ...] = ("source",),
-) -> DataFrame:
-    """raw → first tier with MAP-SIDE digest combine: each Arrow batch emits
-    one partial row (algebraic state + digest) per (keys, window) it
-    contains; the reduce merges partials. Shuffle volume is
-    O(#batches × #windows-per-batch × digest) instead of O(#rows) — the
-    map-side-combine pattern `collect_list` can't give you (it ships every
-    raw value). Same output schema as rollup_raw(with_digest=True); exact
-    while per-window counts stay ≤ K, grid-merged above (functions/sketches).
-    """
-    interval_s = TIER_SECONDS[tier]
-    key_list = list(keys)
-    partial_schema = (
-        ", ".join(f"{k} string" for k in key_list)
-        + ", window_start timestamp, cnt long, sum_n_tok double, "
-        + "min_n_tok double, max_n_tok double, sum_sq_n_tok double, "
-        + "qdigest array<double>"
-    )
-
-    k_sk = sketches.K_DEFAULT
-    grid = np.linspace(0.0, 1.0, k_sk + 1)
-
-    def partials(batches):
-        # vectorized per-batch partial aggregation (optimization round 7,
-        # guide §4.2): one lexsort keyed (group, value) + reduceat for the
-        # algebraic state; the per-window digest is a SLICE of the sorted
-        # value vector while cnt <= K (the exact-digest regime — the
-        # common case), np.quantile only for oversize windows. Replaces a
-        # per-group pandas loop (~4k Python iterations per task at sf0.1)
-        # with O(batch) numpy. Group identity via factorize (C speed);
-        # rows with a null key are dropped, matching pandas groupby.
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            ts = pdf[ts_col].to_numpy("datetime64[s]").astype("int64")
-            w = (ts // interval_s) * interval_s
-            v = pdf[value_col].to_numpy(np.float64)
-            g, _ = pd.factorize(pdf[key_list[0]])
-            g = g.astype(np.int64)
-            keep = g >= 0
-            for kcol in key_list[1:]:
-                c, u = pd.factorize(pdf[kcol])
-                keep &= c >= 0
-                g, _ = pd.factorize(g * (len(u) + 1) + c)
-                g = g.astype(np.int64)
-            if not keep.all():
-                g, w, v = g[keep], w[keep], v[keep]
-                pdf = pdf[keep]
-                m = len(pdf)
-                if m == 0:
-                    continue
-            wc, _ = pd.factorize(w)
-            g = g * (int(wc.max()) + 1) + wc
-            order = np.lexsort((v, g))
-            gs, vs = g[order], v[order]
-            starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
-            ends = np.r_[starts[1:], m]
-            first = order[starts]
-            digs = [
-                vs[s:e] if e - s <= k_sk + 1 else np.quantile(vs[s:e], grid)
-                for s, e in zip(starts, ends)
-            ]
-            data = {kcol: pdf[kcol].to_numpy()[first] for kcol in key_list}
-            data["window_start"] = pd.to_datetime(w[order][starts], unit="s")
-            data["cnt"] = ends - starts
-            data["sum_n_tok"] = np.add.reduceat(vs, starts)
-            data["min_n_tok"] = vs[starts]
-            data["max_n_tok"] = vs[ends - 1]
-            data["sum_sq_n_tok"] = np.add.reduceat(vs * vs, starts)
-            data["qdigest"] = digs
-            yield pd.DataFrame(data)
-
-    part = df.select(*key_list, ts_col, value_col).mapInPandas(
-        partials, schema=partial_schema
-    )
-    # pin the merge width (same rationale as pack_tier, guide §2.5): the
-    # digest-merge stage's cost is per ROW through the Arrow boundary, and
-    # AQE's byte-based coalescing shrinks this small-bytes exchange to a
-    # handful of tasks; an explicit keyed repartition keeps the reduce
-    # wide and is satisfied by the following groupBy (same keys — no
-    # second exchange)
-    width = df.sparkSession.sparkContext.defaultParallelism
-    part = part.repartition(width, *key_list, "window_start")
-
-    @F.pandas_udf("array<double>")
-    def merge(states: pd.Series) -> pd.Series:
-        return pd.Series(sketches.merge_digest_series(states))
-
-    out = (
-        part.groupBy(*key_list, "window_start")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("sum_n_tok").alias("sum_n_tok"),
-            F.min("min_n_tok").alias("min_n_tok"),
-            F.max("max_n_tok").alias("max_n_tok"),
-            F.sum("sum_sq_n_tok").alias("sum_sq_n_tok"),
-            F.collect_list(F.struct("qdigest", "cnt")).alias("_dstate"),
-        )
-        .withColumn("avg_n_tok", F.col("sum_n_tok") / F.col("cnt"))
-        .withColumn("qdigest", merge("_dstate"))
-        .drop("_dstate")
-    )
-    return out.select(
-        *key_list, "window_start", F.lit(tier).alias("tier"), *AGG_COLS,
-        "qdigest",
     )
 
 
@@ -274,22 +158,10 @@ def full_cascade(
     keys: tuple[str, ...] = ("source",),
     value_col: str = "n_tok",
     with_digest: bool = False,
-    digest_mode: str = "partial",
 ) -> dict[str, DataFrame]:
-    """Run raw → 1m → 1h → 1d; returns {tier: DataFrame}.
-
-    digest_mode (when with_digest):
-      * "partial" (default) — map-side partial digests; the raw→1m shuffle
-        ships O(#batches × windows) digest rows, not O(rows) raw values.
-        The only choice that survives 10^12-row inputs.
-      * "collect" — collect_list of raw values per window, digest built
-        after the shuffle; kept as the equivalence baseline for tests.
-    """
-    if with_digest and digest_mode == "partial":
-        t1m = rollup_raw_partial_digest(raw, "1m", value_col=value_col, keys=keys)
-    else:
-        t1m = rollup_raw(raw, "1m", value_col=value_col, keys=keys,
-                         with_digest=with_digest)
+    """Run raw → 1m → 1h → 1d; returns {tier: DataFrame}."""
+    t1m = rollup_raw(raw, "1m", value_col=value_col, keys=keys,
+                     with_digest=with_digest)
     t1h = rollup_cascade(t1m, "1m", "1h", keys=keys)
     t1d = rollup_cascade(t1h, "1h", "1d", keys=keys)
     return {"1m": t1m, "1h": t1h, "1d": t1d}

@@ -23,14 +23,14 @@ from datetime import datetime
 from pyspark.sql import SparkSession, functions as F
 
 from tods_spark.operators import compression
-from tods_spark.operators.rollup import (
-    rollup_cascade,
-    rollup_raw,
-    rollup_raw_partial_digest,
-)
+from tods_spark.operators.rollup import rollup_cascade, rollup_raw
 from tods_spark.plans.checkpoint import CheckpointLog, run_tier
 from tods_spark.plans.retention import DEFAULT_HORIZON_DAYS, expire_partitions
 from tods_spark.sources.storage import PartitionedTable
+
+# alias kept only because perfbench/spans.py swaps this name in for tracing
+# (raw→1m has one path, rollup_raw); nothing here calls it
+rollup_raw_partial_digest = rollup_raw
 
 
 def run_engine(
@@ -86,17 +86,11 @@ def run_engine(
             keys=keys, order_col="doc_id",
         )
 
-    # digest path: map-side partials by default — the collect_list variant
-    # ships every raw value through the raw→1m shuffle (O(rows)); partials
-    # ship O(#batches × windows) digest rows. See rollup.full_cascade.
-    if with_digest:
-        raw_to_1m = lambda df: rollup_raw_partial_digest(  # noqa: E731
-            df, "1m", value_col=value_col, keys=keys
-        )
-    else:
-        raw_to_1m = lambda df: rollup_raw(  # noqa: E731
-            df, "1m", value_col=value_col, keys=keys, with_digest=False
-        )
+    # the digest's bytes are digest_from_values' whatever the partitioning
+    # (one JVM expression, see rollup_raw)
+    raw_to_1m = lambda df: rollup_raw(  # noqa: E731
+        df, "1m", value_col=value_col, keys=keys, with_digest=with_digest
+    )
 
     def table(name: str) -> PartitionedTable:
         return PartitionedTable(spark, f"{base_dir}/tier_{name}", ["part_key"])

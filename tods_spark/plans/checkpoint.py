@@ -41,6 +41,18 @@ packed (`source_tier`), so a day whose 1m partition was rewritten since
 — refresh_engine merges late data into 1m without re-packing — is
 re-packed by the next run.
 
+Fingerprints cover the bytes a tier writes, so a kernel swap either keeps
+those bytes or changes this contract on purpose. One such change: the 1m
+digest is now built by a JVM expression whose bytes are exactly
+`sketches.digest_from_values`' for the window's values, independent of
+partitioning (functions/sketches). The partial-digest path it replaced
+differed from that spec by up to ~1e-11 on windows of more than K+1
+values, so those windows' 1m digests — and the 1h/1d digests merged from
+them — changed bytes once; smaller windows are bit-identical. A tree
+written before keeps its bytes and records (a resume, verified or not,
+compares written bytes with their own record); a partition recomputed now
+writes the spec's bytes and records their new fingerprint.
+
 The checkpoint table itself is tiny (one row per partition per tier) and is
 stored as JSON lines appended atomically per run — on a cluster this becomes
 an Iceberg table with MERGE; the interface is the same.

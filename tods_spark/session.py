@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
 _CGROUP_MEMORY_LIMITS = (
     "/sys/fs/cgroup/memory.max",                       # cgroup v2
     "/sys/fs/cgroup/memory/memory.limit_in_bytes",     # cgroup v1
@@ -67,6 +69,14 @@ def get_spark(
     # spawned Python workers inherit it; executorEnv covers cluster mode.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
+    # Python workers import tods_spark by name (UDFs pickle module-level
+    # functions by reference); put the package root on their path so a
+    # driver started from any working directory works. The JVM hands its
+    # own PYTHONPATH to the local workers; executorEnv covers cluster mode.
+    path = os.environ.get("PYTHONPATH")
+    if _PACKAGE_ROOT not in (path or "").split(os.pathsep):
+        os.environ["PYTHONPATH"] = _PACKAGE_ROOT + (
+            os.pathsep + path if path else "")
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS") or _default_cores()
     master = f"local[{cores}]"
@@ -87,10 +97,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 100k-row Arrow batches: the partial-digest/mapInPandas stages pay a
-        # fixed python+groupby cost per batch — 100k cut the raw->1m stage
-        # 33% vs 10k at 16M rows (and larger batches shuffle FEWER partial
-        # rows); ~3 MB/batch of (key, ts, value) stays tiny per worker
+        # 100k-row Arrow batches: grouped/mapInPandas kernels (digest
+        # merges, Gorilla pack, detectors) pay a fixed python cost per
+        # batch. Measured when raw->1m still ran a mapInPandas partial
+        # digest (100k cut that stage 33% vs 10k at 16M rows); raw->1m no
+        # longer crosses into Python and the value was not re-measured
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.driver.memory", driver_mem)
         # pin -Xms to -Xmx: G1 otherwise uncommits heap regions between
@@ -109,6 +120,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "1073741824")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
